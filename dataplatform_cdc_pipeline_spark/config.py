@@ -98,10 +98,6 @@ class MergeConfig:
     # re-insert clears the flag; unmatched deletes stay no-ops. The target
     # schema gains the `__is_deleted` boolean automatically.
     soft_delete: bool = False
-    # W1 dedup physical strategy: 'agg' (groupBy + max(struct) — map-side
-    # partial aggregation, minimal shuffle; the scale default) or 'window'
-    # (ranked window — shuffles every row, exact reference plan shape).
-    dedup_strategy: str = "agg"
     # Payload schema drift: what to do when the CDC payload presents a key
     # that is not a target column (the mid-stream new-business-column event).
     # The reference re-reads the target's INFORMATION_SCHEMA every run
@@ -152,8 +148,6 @@ class MergeConfig:
             raise ValueError("config requires at least one primary-key column")
         if self.ts_ns_encoding not in ("auto", "nanos", "iso"):
             raise ValueError(f"bad ts_ns_encoding: {self.ts_ns_encoding}")
-        if self.dedup_strategy not in ("agg", "window"):
-            raise ValueError(f"bad dedup_strategy: {self.dedup_strategy}")
         if self.schema_drift_policy not in ("ignore", "fail", "evolve"):
             raise ValueError(f"bad schema_drift_policy: {self.schema_drift_policy}")
 

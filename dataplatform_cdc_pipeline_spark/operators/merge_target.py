@@ -18,8 +18,7 @@ not available in this environment — so the engine emulates it:
 table; bucket count scales with table size (pick N so a bucket ≈ 1-4 GB).
 Both sides of the resolve join are hash-distributed on the same PK, so AQE
 plans a shuffle that only moves the (small) change set when the bucket side
-is large. On a production cluster this class swaps to ``DeltaTable.merge``
-with identical call semantics.
+is large.
 """
 
 from __future__ import annotations
@@ -30,6 +29,7 @@ import os
 import shutil
 import time
 import uuid
+from collections.abc import Callable
 
 logger = logging.getLogger("dataplatform_cdc_pipeline_spark.merge_target")
 
@@ -90,25 +90,11 @@ def resolve_changes(
     - unmatched non-delete → source row inserted;
     - unmatched target rows pass through untouched.
     """
-    # Join strategy (r12 optimization, guide §3.1): hint shuffled-hash with
-    # the CHANGE SET as build side — a full-outer SHJ (supported since
-    # Spark 3.1) replaces the SortMergeJoin's two per-partition sorts with
-    # one hash build over the bounded batch. The change set is one deduped
-    # batch (bounded per run) while the target side is the table — at any
-    # scale the batch is the side to build. Measured on the sf0.1 resolve
-    # (scripts/join_ab_bench.py): 0.29 s → 0.22 s warm, SortMergeJoin →
-    # ShuffledHashJoin with both Sort nodes gone.
-    #
-    # Escape hatch: SHJ's build side cannot spill, so a pathological
-    # catch-up batch (outage backlog, initial load routed through the
-    # incremental path) whose deduped per-partition slice exceeds task
-    # memory would OOM where sort-merge completes. SPARK_GRAFT_RESOLVE_JOIN
-    # selects the strategy per deployment: "shuffle_hash" (default),
-    # "merge" (Spark's SMJ hint — the safe fallback for unbounded
-    # backfills), or "none" (planner's choice).
-    join_hint = os.environ.get("SPARK_GRAFT_RESOLVE_JOIN", "shuffle_hash")
+    # shuffled-hash join with the CHANGE SET (one bounded batch) as build
+    # side: it replaces the SortMergeJoin's two per-partition sorts with
+    # one hash build — measured 0.29 s → 0.22 s warm on the sf0.1 resolve.
     t = target_rows.withColumn("__t_present", F.lit(True)).alias("t")
-    s_a = (changes if join_hint == "none" else changes.hint(join_hint)).alias("s")
+    s_a = changes.hint("shuffle_hash").alias("s")
     cond = None
     for c in cfg.pk:
         # null-safe: a null-valued PK upserts its own slot (contract-tested)
@@ -166,10 +152,11 @@ def resolve_changes(
 class ParquetMergeTarget(MergeTarget):
     """A mutable typed 'silver' table backed by bucketed parquet (K1-K4).
 
-    One of two implementations of the
+    The base of every
     :class:`~dataplatform_cdc_pipeline_spark.operators.target_contract.MergeTarget`
-    contract (the other is DeltaMergeTarget — the production swap-in);
-    tests/test_merge_target_contract.py runs the same suite against both.
+    sink (the snapshot, deletion-vector and SCD2 sinks subclass it);
+    tests/test_merge_target_contract.py runs the same suite against it and
+    the snapshot and deletion-vector sinks.
     """
 
     def __init__(self, spark: SparkSession, path: str, cfg: MergeConfig, schema: T.StructType):
@@ -486,8 +473,7 @@ class ParquetMergeTarget(MergeTarget):
         either the old or the new bucket. A commit manifest (staging id +
         affected buckets) is written before the first swap and removed after
         the last, so a mid-swap crash is detectable (``pending_commit``) and
-        replayable — Delta's atomic log commit replaces this whole dance on
-        a real deployment.
+        replayable.
 
         A pending transactional-audit payload fails loudly here: the
         per-bucket swap has no single publish to attach it to (use the
@@ -509,6 +495,48 @@ class ParquetMergeTarget(MergeTarget):
                 "made atomic with the data here"
             )
         staging = f"{self.path}.staging-{uuid.uuid4().hex[:8]}"
+        try:
+            self._stage_and_publish(
+                merged, affected, staging, expected_version, sort_exprs,
+                publish=lambda: self._swap_in(staging, affected),
+            )
+        finally:
+            shutil.rmtree(staging, ignore_errors=True)
+
+    def _swap_in(self, staging: str, affected: list[int]) -> None:
+        """Publish step of the bucket-swap sink: move each staged bucket
+        directory over its live one, bracketed by the commit manifest."""
+        os.makedirs(self.path, exist_ok=True)
+        manifest = os.path.join(self.path, self.MANIFEST)
+        with open(manifest, "w") as f:
+            json.dump({"staging": staging, "buckets": affected}, f)
+        for b in affected:
+            src = os.path.join(staging, f"{BUCKET_COL}={b}")
+            dst = os.path.join(self.path, f"{BUCKET_COL}={b}")
+            if os.path.isdir(dst):
+                shutil.rmtree(dst)
+            if os.path.isdir(src):
+                shutil.move(src, dst)
+            # else: bucket emptied by deletes — old dir already removed
+        self._write_version(self._read_version() + 1)
+        os.remove(manifest)  # swap complete — commit is clean
+
+    def _stage_and_publish(
+        self,
+        merged: DataFrame,
+        affected: list[int],
+        staging: str,
+        expected_version: int | None,
+        sort_exprs: list | None,
+        publish: Callable[[], None],
+    ) -> None:
+        """The commit steps every sink shares, in order: lay ``merged``
+        out one task per affected bucket, write it to the fresh
+        ``staging`` tree (removed again if the write fails), run
+        ``pre_commit_hook``, refuse the commit if another writer advanced
+        the version past ``expected_version``, then ``publish()`` — the
+        sink's own step that makes the staged tree visible. Failures after
+        the write propagate to the sink's own cleanup."""
         # repartition to ~one task per affected bucket: without it every
         # shuffle partition writes a sliver of every bucket (#partitions ×
         # #buckets small files — measured 40% slower merges at local[32])
@@ -531,7 +559,7 @@ class ParquetMergeTarget(MergeTarget):
             )
         t0 = time.time()
         try:
-            merged.write.mode("overwrite").partitionBy(*part_cols).parquet(staging)
+            merged.write.mode("errorifexists").partitionBy(*part_cols).parquet(staging)
         except BaseException:
             # a failed staging write leaves a partial, never-referenced
             # tree — reclaim it now instead of waiting for vacuum()
@@ -546,24 +574,11 @@ class ParquetMergeTarget(MergeTarget):
                 raise ConcurrentWriteError(
                     f"target {self.path} advanced from version {expected_version} "
                     f"to {self._read_version()} since this merge read it; "
-                    "replay the window against the new state"
+                    "the other writer's commit is intact — replay the window "
+                    "against the new state"
                 )
-            os.makedirs(self.path, exist_ok=True)
-            manifest = os.path.join(self.path, self.MANIFEST)
-            with open(manifest, "w") as f:
-                json.dump({"staging": staging, "buckets": affected}, f)
-            for b in affected:
-                src = os.path.join(staging, f"{BUCKET_COL}={b}")
-                dst = os.path.join(self.path, f"{BUCKET_COL}={b}")
-                if os.path.isdir(dst):
-                    shutil.rmtree(dst)
-                if os.path.isdir(src):
-                    shutil.move(src, dst)
-                # else: bucket emptied by deletes — old dir already removed
-            self._write_version(self._read_version() + 1)
-            os.remove(manifest)  # swap complete — commit is clean
+            publish()
         finally:
-            shutil.rmtree(staging, ignore_errors=True)
             self.phase_times["swap"] = round(time.time() - t0, 3)
 
     # -- maintenance ---------------------------------------------------------

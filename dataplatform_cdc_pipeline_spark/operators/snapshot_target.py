@@ -57,7 +57,6 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import time
 import uuid
 
 from pyspark.sql import DataFrame
@@ -578,64 +577,11 @@ class SnapshotMergeTarget(ParquetMergeTarget):
         new_version = (expected_version if expected_version is not None else v0) + 1
         tree = f"{self.DATA_DIR}/v{new_version}-{uuid.uuid4().hex[:8]}"
         staging = os.path.join(self.path, tree)
-        merged = merged.repartition(max(len(affected), 1), F.col(BUCKET_COL))
-        part_cols = [BUCKET_COL] + ([PDATE_COL] if self.cfg.partition_field else [])
-        if sort_exprs is not None:
-            merged = merged.sortWithinPartitions(*part_cols, *sort_exprs)
-        elif self.cfg.clustering_fields:
-            merged = merged.sortWithinPartitions(
-                *part_cols, *[F.col(c) for c in self.cfg.clustering_fields]
+        try:
+            self._stage_and_publish(
+                merged, affected, staging, expected_version, sort_exprs,
+                publish=lambda: self._publish_tree(tree, affected, new_version, txn),
             )
-        t0 = time.time()
-        try:
-            merged.write.mode("errorifexists").partitionBy(*part_cols).parquet(staging)
-        except BaseException:
-            # a failed staging write leaves a partial, never-referenced
-            # tree — reclaim it now instead of waiting for vacuum()
-            shutil.rmtree(staging, ignore_errors=True)
-            raise
-        self.phase_times["resolve_write"] = round(time.time() - t0, 3)
-        t0 = time.time()
-        try:
-            if self.pre_commit_hook is not None:
-                self.pre_commit_hook()
-            if expected_version is not None and self._read_version() != expected_version:
-                raise ConcurrentWriteError(
-                    f"target {self.path} advanced from version {expected_version} "
-                    f"to {self._read_version()} since this merge read it; "
-                    "the other writer's commit is intact — re-read and re-merge"
-                )
-            prev = self._manifest() or {"buckets": {}}
-            written = {
-                e.split("=", 1)[1]: f"{tree}/{e}"
-                for e in os.listdir(staging)
-                if e.startswith(f"{BUCKET_COL}=")
-            }
-            entries = {
-                b: d for b, d in prev["buckets"].items() if int(b) not in set(affected)
-            }
-            entries.update(written)  # affected-but-empty buckets simply drop out
-            # zone maps: harvest written buckets' footer stats; carry
-            # unaffected buckets' stats forward alongside their entries
-            zmaps = {
-                b: s
-                for b, s in prev.get("stats", {}).items()
-                if int(b) not in set(affected)
-            }
-            for b in written:
-                s = self._bucket_footer_stats(os.path.join(self.path, written[b]))
-                if s:
-                    zmaps[b] = s
-            fps, fp_cols = self._harvest_fingerprints(prev, affected, written)
-            manifest = {"version": new_version, "buckets": entries, "stats": zmaps}
-            if fps or fp_cols:
-                manifest["fps"] = fps
-                manifest["fp_cols"] = fp_cols
-            if txn is not None:
-                # transactional audit (operators/txn_audit.py): the run
-                # record becomes visible in the SAME publish as the data
-                manifest["txn"] = txn
-            self._publish(manifest, new_version)
         except ConcurrentWriteError:
             # losing writer: its tree was never referenced — reclaim now
             # rather than waiting for vacuum()
@@ -659,7 +605,44 @@ class SnapshotMergeTarget(ParquetMergeTarget):
                 # coordinator's finalize/abort/recover to resolve)
                 shutil.rmtree(staging, ignore_errors=True)
             raise
-        self.phase_times["swap"] = round(time.time() - t0, 3)
+
+    def _publish_tree(
+        self, tree: str, affected: list[int], new_version: int, txn: dict | None
+    ) -> None:
+        """Publish step of the snapshot sink: one manifest that points the
+        affected buckets at the staged ``tree`` and carries every other
+        bucket's entry, zone map and fingerprint forward."""
+        prev = self._manifest() or {"buckets": {}}
+        written = {
+            e.split("=", 1)[1]: f"{tree}/{e}"
+            for e in os.listdir(os.path.join(self.path, tree))
+            if e.startswith(f"{BUCKET_COL}=")
+        }
+        entries = {
+            b: d for b, d in prev["buckets"].items() if int(b) not in set(affected)
+        }
+        entries.update(written)  # affected-but-empty buckets simply drop out
+        # zone maps: harvest written buckets' footer stats; carry
+        # unaffected buckets' stats forward alongside their entries
+        zmaps = {
+            b: s
+            for b, s in prev.get("stats", {}).items()
+            if int(b) not in set(affected)
+        }
+        for b in written:
+            s = self._bucket_footer_stats(os.path.join(self.path, written[b]))
+            if s:
+                zmaps[b] = s
+        fps, fp_cols = self._harvest_fingerprints(prev, affected, written)
+        manifest = {"version": new_version, "buckets": entries, "stats": zmaps}
+        if fps or fp_cols:
+            manifest["fps"] = fps
+            manifest["fp_cols"] = fp_cols
+        if txn is not None:
+            # transactional audit (operators/txn_audit.py): the run
+            # record becomes visible in the SAME publish as the data
+            manifest["txn"] = txn
+        self._publish(manifest, new_version)
 
     #: opt-in content fingerprints for scan-free reconciliation
     #: (operators/reconcile.reconcile_snapshots): when True, every commit

@@ -2,19 +2,18 @@
 
 The reference's sink is engine-native DML — BigQuery ``MERGE`` transaction
 (merge.sql:368-457) or MySQL UPDATE-join/INSERT-NOT-EXISTS/DELETE-join
-(step-6:431-462). The Spark engine has two implementations of the same
-contract:
+(step-6:431-462). The Spark engine implements the same contract in three
+sinks, all built on
+:class:`~dataplatform_cdc_pipeline_spark.operators.merge_target.ParquetMergeTarget`:
+the bucket-swap sink itself (bucket-level atomicity, crash-detectable via a
+commit manifest), the table-atomic snapshot sink (``snapshot_target``) and
+the deletion-vector sink (``dv_target``). The SCD2 history sink (``scd2``)
+shares the base class and its commit but keeps history rows, so its own
+tests cover it.
 
-- :class:`~dataplatform_cdc_pipeline_spark.operators.merge_target.ParquetMergeTarget`
-  — bucketed-parquet emulation (works everywhere, bucket-level atomicity,
-  crash-detectable via a commit manifest);
-- :class:`~dataplatform_cdc_pipeline_spark.operators.delta_target.DeltaMergeTarget`
-  — Delta Lake ``DeltaTable.merge`` (table-atomic via the transaction log;
-  the production swap-in when delta-spark is installed).
-
-Semantics both must satisfy (verified by
+Semantics the three must satisfy (verified by
 ``tests/test_merge_target_contract.py``, which runs the SAME suite against
-every implementation importable in the environment):
+each of them):
 
 - ``merge(changes)`` takes a DEDUPED change set (one row per PK) carrying
   the target data columns plus ``__op`` ('c'/'u'/'d') and optionally
@@ -35,7 +34,8 @@ every implementation importable in the environment):
   (merge.sql:360-366 — counts feed the audit row, the window feeds the
   watermark);
 - ``pending_commit()`` is None on a cleanly-committed target (only the
-  parquet emulation can ever return a manifest; Delta commits are atomic).
+  bucket-swap commit can ever leave a manifest; a snapshot commit is one
+  atomic link).
 """
 
 from __future__ import annotations

@@ -119,21 +119,11 @@ def build_changes(
         F.col("__pos"),
         *[e.alias(a) for a, e in zip(pk_aliases, _pk_exprs(cfg, target_schema))],
     )
-    if cfg.dedup_strategy == "agg":
-        # agg-dedup: groupBy(pk).max(struct(ts, pos, carry…)) — map-side
-        # partial aggregation ships ≤1 candidate per key per partition
-        deduped = latest_per_key_agg(
-            keyed, pk_aliases, "__event_ts", "__pos", ["data", cfg.load_ts_col, "__op"]
-        )
-    else:
-        # window-dedup: exact reference plan shape (ranked window, rn=1)
-        deduped = latest_per_key(
-            keyed,
-            pk_aliases,
-            ts_col="__event_ts",
-            pos_col="__pos",
-        )
-    deduped = deduped.withColumn("__payload", parse_payload("data"))
+    # groupBy(pk).max(struct(ts, pos, carry…)) — map-side partial
+    # aggregation ships ≤1 candidate per key per partition
+    deduped = latest_per_key_agg(
+        keyed, pk_aliases, "__event_ts", "__pos", ["data", cfg.load_ts_col, "__op"]
+    ).withColumn("__payload", parse_payload("data"))
     proj = typed_projection(target_schema, cfg, deterministic_audit=deterministic_audit)
     # __load_ts rides along so the merge can derive window stats + the next
     # watermark from the SAME cached frame (one agg job — the reference also

@@ -32,9 +32,9 @@ that Canal itself splits statements into multiple envelopes; the adapter
 fails loudly (ANSI arithmetic stays exact, and the guard column raises on
 violation) rather than silently colliding positions.
 
-Everything is native Columns (one ``from_json`` of the array + scalar
-``get_json_object`` probes, one generator ``posexplode``) — scan-speed,
-no Python in the path.
+Everything is native Columns (one ``from_json`` of the whole envelope,
+array included, then one generator ``posexplode``) — scan-speed, no
+Python in the path.
 """
 
 from __future__ import annotations

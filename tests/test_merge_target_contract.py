@@ -1,7 +1,6 @@
 """Executable MergeTarget contract (operators/target_contract.py): the SAME
-suite runs against every sink implementation available in the environment —
-ParquetMergeTarget always, DeltaMergeTarget whenever delta-spark is
-installed (skip-marked here; the class stays importable regardless).
+suite runs against every sink implementation — the bucket-swap, snapshot
+and deletion-vector sinks, each also under the date/clustering layout.
 
 Covers the reference MERGE semantics each sink must reproduce:
 update/insert (merge.sql:403-418), delete + unmatched-delete no-op
@@ -19,11 +18,9 @@ import uuid
 import pytest
 from pyspark.sql import functions as F
 
-from dataplatform_cdc_pipeline_spark.operators.delta_target import (
-    HAS_DELTA,
-    DeltaMergeTarget,
-)
+from dataplatform_cdc_pipeline_spark.operators.dv_target import DvMergeTarget
 from dataplatform_cdc_pipeline_spark.operators.merge_target import ParquetMergeTarget
+from dataplatform_cdc_pipeline_spark.operators.snapshot_target import SnapshotMergeTarget
 from dataplatform_cdc_pipeline_spark.operators.target_contract import MergeTarget
 from dataplatform_cdc_pipeline_spark.sources.cdc import USER_STATE_SCHEMA, user_state_config
 
@@ -53,54 +50,22 @@ def changes(spark, rows):
     return spark.createDataFrame(data, CHANGE_SCHEMA)
 
 
+#: bq_partition_field/bq_clustering_field layout options — layout must
+#: never change merge semantics, so every sink also runs under it
+LAYOUT = {"partition_field": "source_ts_ns_order", "clustering_fields": ("value",)}
+
 IMPLEMENTATIONS = [
     pytest.param((ParquetMergeTarget, {}), id="parquet"),
-    # same contract through the bq_partition_field/bq_clustering_field
-    # layout options — layout must never change merge semantics
-    pytest.param(
-        (
-            ParquetMergeTarget,
-            {"partition_field": "source_ts_ns_order", "clustering_fields": ("value",)},
-        ),
-        id="parquet-datelayout-clustered",
-    ),
-    pytest.param(
-        (DeltaMergeTarget, {}),
-        id="delta",
-        marks=pytest.mark.skipif(not HAS_DELTA, reason="delta-spark not installed"),
-    ),
-]
-
-from dataplatform_cdc_pipeline_spark.operators.snapshot_target import (  # noqa: E402
-    SnapshotMergeTarget,
-)
-
-from dataplatform_cdc_pipeline_spark.operators.dv_target import (  # noqa: E402
-    DvMergeTarget,
-)
-
-IMPLEMENTATIONS += [
+    pytest.param((ParquetMergeTarget, LAYOUT), id="parquet-datelayout-clustered"),
     # manifest-versioned snapshot sink: same merge semantics, table-atomic
     # commit (one hard-linked manifest), snapshot-isolated readers
     pytest.param((SnapshotMergeTarget, {}), id="snapshot"),
+    pytest.param((SnapshotMergeTarget, LAYOUT), id="snapshot-datelayout-clustered"),
     # deletion-vector sink: merge-on-read deletes (per-bucket tombstone
     # files), same observable merge semantics — the whole point of the
     # shared suite
     pytest.param((DvMergeTarget, {}), id="deletion-vectors"),
-    pytest.param(
-        (
-            DvMergeTarget,
-            {"partition_field": "source_ts_ns_order", "clustering_fields": ("value",)},
-        ),
-        id="dv-datelayout-clustered",
-    ),
-    pytest.param(
-        (
-            SnapshotMergeTarget,
-            {"partition_field": "source_ts_ns_order", "clustering_fields": ("value",)},
-        ),
-        id="snapshot-datelayout-clustered",
-    ),
+    pytest.param((DvMergeTarget, LAYOUT), id="dv-datelayout-clustered"),
 ]
 
 
@@ -309,8 +274,6 @@ def test_concurrent_writer_conflict_detected(spark, make_target):
     winner's state intact (Delta: ConcurrentAppendException from the
     transaction log; emulated here with a commit-version check)."""
     t1 = make_target()
-    if not hasattr(t1, "pre_commit_hook"):
-        pytest.skip("native transaction log serializes concurrent writers")
     from dataplatform_cdc_pipeline_spark.operators.merge_target import (
         ConcurrentWriteError,
     )

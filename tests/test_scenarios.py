@@ -229,7 +229,8 @@ def test_audit_compaction(spark):
     assert audit.read_watermark(cfg.cdc_table, cfg.target_table) == wm_before
 
 
-# physical dedup strategies agree: agg (map-side combine) vs window (ranked)
+# physical dedup strategies agree: agg (map-side combine, unified plan) vs
+# window (ranked latest_per_key, two-stream fidelity plan)
 def test_dedup_strategy_equivalence(spark):
     rows = []
     pos = 0
@@ -238,8 +239,8 @@ def test_dedup_strategy_equivalence(spark):
             pos += 1
             op = "d" if (uid + j) % 11 == 0 else ("c" if j == 0 else "u")
             rows.append((op, pos * 10, pos, uid, float(pos)))
-    _, t_agg, _ = merge(spark, rows, dedup_strategy="agg")
-    _, t_win, _ = merge(spark, rows, dedup_strategy="window")
+    _, t_agg, _ = merge(spark, rows)
+    _, t_win, _ = merge(spark, rows, two_stream_fidelity=True)
     assert state(t_agg) == state(t_win)
 
 
